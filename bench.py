@@ -376,41 +376,42 @@ def summary_line(full: dict) -> dict:
     verdict task 2): BENCH_r09/r10 lost headline_total, the normalized
     totals, and host_noisy because the driver keeps only the final 2000
     characters and those fields sat before the 122-entry query dict.
-    Repeats the driver-contract keys plus every summary number; bounded
-    size is asserted so a field addition can't silently push the line
-    back over the truncation horizon.
+    Repeats the contract keys plus every summary number; the size
+    of those base fields is asserted so a field addition can't silently
+    push the line back over the truncation horizon.
 
     r12 (r11 verdict task 1): the line now also carries a compact
     per-query map — the driver's PERF comparator and its per-query
     core-scaling audit parse only this final line, so two rounds of
     artifacts had `per_query: {}` / `n_common: 0` while the full
     122-entry dict sat un-captured on the preceding line. `queries`
-    holds the SLOWEST queries first at 2-decimal raw seconds, greedily
-    filled until the encoded line reaches the budget (hard-capped well
-    under the 2000-char tail); `queries_omitted` counts what didn't
-    fit, so truncation is explicit, never silent. The full-precision
+    holds the SLOWEST queries first at 2-decimal raw seconds, filled
+    until the next entry would push the encoded line over the budget
+    (well under the 2000-char tail); `queries_omitted` counts what
+    didn't fit, so truncation is explicit, never silent. The full-precision
     complete dict still leads the preceding full-artifact line — no
     measurement changed, only where a copy of it is printed."""
     out = {k: full[k] for k in _SUMMARY_KEYS if k in full}
     out["summary_of"] = "full artifact on the preceding stdout line"
     timings = full.get("queries") or {}
-    compact: dict[str, float] = {}
-    out["queries"] = compact
+    out["queries"] = {}
     out["queries_omitted"] = len(timings)
-    base_len = len(json.dumps(out)) + len(str(len(timings)))
-    budget = _SUMMARY_MAX_CHARS - base_len
-    for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
-        entry = len(f'"{name}": {round(sec, 2)}, ')
-        if entry > budget:
-            break
-        compact[name] = round(sec, 2)
-        budget -= entry
-    out["queries_omitted"] = len(timings) - len(compact)
-    encoded = json.dumps(out)
-    assert len(encoded) <= _SUMMARY_MAX_CHARS, (
-        f"summary line {len(encoded)} chars > {_SUMMARY_MAX_CHARS} — "
-        "it would risk the driver's 2000-char tail truncating it"
+    base = json.dumps(out)
+    assert len(base) <= _SUMMARY_MAX_CHARS, (
+        f"summary base fields {len(base)} chars > {_SUMMARY_MAX_CHARS} — "
+        "they would risk the 2000-char stdout tail truncating the line"
     )
+    # Fill slowest-first and stop at the first entry that would push the
+    # encoded line over the budget; that entry and the faster ones are
+    # counted in queries_omitted.
+    compact: dict[str, float] = out["queries"]
+    for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
+        compact[name] = round(sec, 2)
+        out["queries_omitted"] = len(timings) - len(compact)
+        if len(json.dumps(out)) > _SUMMARY_MAX_CHARS:
+            del compact[name]
+            out["queries_omitted"] += 1
+            break
     return out
 
 

@@ -4,12 +4,13 @@ Reference: the ``ParsePubSubMessage`` DoFn (Streamingdag.py:159-236) — a
 per-record parse/validate/coerce/enrich/filter. Here each step is a pure
 DataFrame->DataFrame function built from Column expressions, so:
 
-- Catalyst folds the whole chain into one whole-stage-codegen'd project +
-  filter over the scan (no Python on the hot path, ~10-100x the DoFn's
-  row-at-a-time throughput);
+- the wire chain compiles to one JSON parse (a Generate, see
+  :func:`parse_wire`) followed by one whole-stage-codegen'd filter +
+  project over the parsed columns — no Python on the hot path;
 - the SAME functions apply to ``spark.read`` and ``spark.readStream``
   (batch/streaming symmetry, SURVEY.md §7);
-- filters composed here are pushed down to the parquet scan by Catalyst.
+- the validate and quality filters stop at the parse: they read parsed
+  columns, so Catalyst cannot push them into the scan.
 
 Determinism: the reference stamps ``processed_at = utcnow()``
 (Streamingdag.py:183-184). Every function takes an optional fixed ``as_of``
@@ -51,10 +52,21 @@ def parse_wire(df: DataFrame, value_col: str = "value") -> DataFrame:
     malformed JSON -> NULL struct (dropped by :func:`validate_required`),
     unknown keys dropped (`ignoreUnknownValues`), absent keys -> NULL
     (Streamingdag.py:166-172, 187-203, 318-321).
+
+    The parse must be a barrier, so it runs in a Generate
+    (``inline(array(from_json(...)))``), not a Project. Over a Project,
+    Catalyst pushes the downstream filters (T5's null checks, E4's score)
+    below it by inlining the parse into each predicate, and its JSON
+    pruning then splits every field access into its own single-field
+    ``from_json``: 14 full tokenizations of each line, which subexpression
+    elimination cannot merge. A Generate's output columns are not
+    expressions over its input, so the filters stay above it and the
+    payload is tokenized once. A NULL struct (malformed or non-object
+    payload) inlines to an all-NULL row, which T5 drops.
     """
     payload = F.col(value_col).cast("string")
-    parsed = F.from_json(payload, WIRE_JSON_SCHEMA).alias("e")
-    return df.select(parsed).select("e.*")
+    parsed = F.from_json(payload, WIRE_JSON_SCHEMA)
+    return df.select(F.inline(F.array(parsed)))
 
 
 def validate_required(df: DataFrame) -> DataFrame:

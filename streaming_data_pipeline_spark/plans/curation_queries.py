@@ -447,10 +447,10 @@ def etl_dead_letter_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``low_quality`` by the reference's E3 score (< 50);
     - ``ok`` otherwise.
 
-    The whole classifier is one codegen'd projection + one hash
-    aggregate; a production DLQ writes the same classified frame to its
-    own date-partitioned sink (filter reason != 'ok') instead of
-    aggregating.
+    The whole classifier is one parse (a Generate), one codegen'd
+    projection and one hash aggregate; a production DLQ writes the same
+    classified frame to its own date-partitioned sink (filter reason !=
+    'ok') instead of aggregating.
     """
     from pyspark.sql import types as T
 
@@ -497,23 +497,27 @@ def etl_dead_letter_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         corrupt_schema,
         {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
     )
+    # One parse per payload: a Generate is a node Catalyst neither prunes
+    # into per-field from_json copies nor inlines into its consumers (see
+    # operators/transforms.parse_wire).
+    parsed = wire.select("event_id", F.inline(F.array(e)))
     required_null = F.lit(False)
     for f in REQUIRED_FIELDS:
-        required_null = required_null | e.getField(f).isNull()
+        required_null = required_null | F.col(f).isNull()
     score = data_quality_score(
-        e.getField("user_id"),
-        e.getField("message"),
-        e.getField("value"),
-        truthy_str(e.getField("timestamp")),
+        F.col("user_id"),
+        F.col("message"),
+        F.col("value"),
+        truthy_str(F.col("timestamp")),
     )
     reason = (
-        F.when(e.getField("_corrupt").isNotNull(), "malformed_json")
+        F.when(F.col("_corrupt").isNotNull(), "malformed_json")
         .when(required_null, "missing_required")
         .when(score < 50, "low_quality")
         .otherwise("ok")
     )
     return (
-        wire.select("event_id", reason.alias("reason"))
+        parsed.select("event_id", reason.alias("reason"))
         .groupBy("reason")
         .agg(
             F.count("*").alias("n"),

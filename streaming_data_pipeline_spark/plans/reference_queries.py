@@ -21,7 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streaming_data_pipeline_spark.plans.base import AS_OF, ENRICHED_CTE, enriched_events
+from streaming_data_pipeline_spark.plans.base import (
+    AS_OF,
+    ENRICHED_CTE,
+    enriched_events,
+    int_halfup_avg_expr,
+    int_halfup_avg_sql,
+)
 from streaming_data_pipeline_spark.schema import ENRICHED_COLUMNS
 
 
@@ -32,15 +38,25 @@ def etl_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def event_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (README.md:186-195): per-event-type count/avg/latest over a
-    freshness window (widened 1h -> 24h for fixture density)."""
+    freshness window (widened 1h -> 24h for fixture density).
+
+    The average is an exact DECIMAL(18,2) sum rounded half-up by integer
+    arithmetic: a double AVG rounded to 4 dp differs between engines
+    whenever the 2-decimal values' mean lands on a 5th-decimal tie."""
     ev = enriched_events(spark, sf_dir)
     return (
         ev.filter(F.col("timestamp") >= F.expr(f"TIMESTAMP '{AS_OF}' - INTERVAL 24 HOURS"))
         .groupBy("event_type")
         .agg(
             F.count("*").alias("event_count"),
-            F.round(F.avg("value"), 4).alias("avg_value"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("value_sum"),
             F.max("timestamp").alias("latest_event"),
+        )
+        .select(
+            "event_type",
+            "event_count",
+            int_halfup_avg_expr("value_sum", "event_count").alias("avg_value"),
+            "latest_event",
         )
         .orderBy(F.desc("event_count"), "event_type")
     )
@@ -186,7 +202,8 @@ ORACLE = {
     + f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS event_count,
-           round(AVG(value), 4) AS avg_value,
+           {int_halfup_avg_sql("SUM(CAST(value AS DECIMAL(18,2)))", "COUNT(*)")}
+             AS avg_value,
            MAX("timestamp") AS latest_event
     FROM enriched
     WHERE "timestamp" >= TIMESTAMP '{AS_OF}' - INTERVAL 24 HOURS

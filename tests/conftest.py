@@ -136,3 +136,30 @@ def assert_query_matches_oracle(spark, con, name: str, sf_dir: str):
     assert g == w, f"{name}: value mismatch at sorted rows {mism}:\n" + "\n".join(
         f"  spark={g[i]}\n  duck ={w[i]}" for i in mism
     )
+
+
+def count_plan_expressions(plan, class_name: str) -> int:
+    """Number of Catalyst expression nodes of class ``class_name``
+    (simple name, e.g. ``JsonToStructs``) in a JVM plan tree — counted
+    node by node over every operator's expressions, not by matching the
+    plan string."""
+    n = 0
+    plans = [plan]
+    while plans:
+        p = plans.pop()
+        exprs = _seq(p.expressions())
+        while exprs:
+            e = exprs.pop()
+            n += e.getClass().getSimpleName() == class_name
+            exprs.extend(_seq(e.children()))
+        plans.extend(_seq(p.children()))
+    return n
+
+
+def _seq(jseq) -> list:
+    """A Scala Seq reached through py4j, as a Python list."""
+    it = jseq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, assert_query_matches_oracle
+from tests.conftest import SF_DIR, assert_query_matches_oracle, count_plan_expressions
 
 
 @pytest.mark.parametrize(
@@ -118,3 +118,14 @@ def test_scd2_intervals_are_contiguous(spark):
         F.col("valid_to").isNotNull() & (F.col("valid_to") != F.col("nxt"))
     )
     assert gaps.count() == 0
+
+
+def test_dead_letter_routing_parses_each_payload_once(spark):
+    """Each classifier field read must come from one parse, not from a
+    per-field from_json copy Catalyst's JSON pruning would make of
+    every getField on a projected from_json."""
+    import __spark_entry__ as entry
+
+    df = entry.queries()["etl_dead_letter_routing"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert count_plan_expressions(plan, "JsonToStructs") == 1

@@ -29,3 +29,42 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "event_count" in df.columns
+
+
+def test_event_type_rollup_rounds_ties_half_up(spark, duck, tmp_path):
+    """A per-type mean on a 5th-decimal tie (307.03 / 8 = 38.37875) must
+    round half-up to 38.3788 in the plan and in its oracle. Rounding a
+    double AVG to 4 dp splits the engines on such ties (Spark 38.3788,
+    DuckDB 38.3787)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streaming_data_pipeline_spark.plans.reference_queries import (
+        ORACLE,
+        event_type_rollup,
+    )
+
+    values = [38.37] + [38.38] * 7
+    n = len(values)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array([datetime.datetime(2024, 1, 30, 12)] * n, pa.timestamp("us")),
+                "user_id": pa.array([1] * n, pa.int64()),
+                "event_type": ["tie"] * n,
+                "value": values,
+                "props": ['{"k": 1}'] * n,
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    [got] = event_type_rollup(spark, str(tmp_path)).collect()
+    duck.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    [(_, count, want, _)] = duck.execute(ORACLE["event_type_rollup"]).fetchall()
+    assert got.event_count == count == n
+    assert got.avg_value == want == 38.3788

@@ -8,7 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR, assert_query_matches_oracle
+from tests.conftest import SF_DIR, assert_query_matches_oracle, count_plan_expressions
 
 AS_OF = "2024-01-31 00:00:00"
 
@@ -70,6 +70,28 @@ def test_streaming_etl_end_to_end_matches_batch(spark, tmpdirs):
         assert g[r.id].event_hour == r.event_hour
     # partitioned sink: event_date directories exist (partition pruning path)
     assert g["e000"].event_date is not None
+
+
+def test_streaming_transform_parses_each_message_once(spark, tmpdirs):
+    """The executed micro-batch plan keeps the wire parse at one
+    from_json per message: the incremental plan must not re-open the
+    filter pushdown that splits it into per-field parses."""
+    from streaming_data_pipeline_spark.streaming.pipeline import transform
+
+    _write_messages(tmpdirs["in"], EVENTS)
+    stream = spark.readStream.format("text").load(tmpdirs["in"])
+    q = (
+        transform(stream, as_of=AS_OF)
+        .writeStream.format("noop")
+        .option("checkpointLocation", tmpdirs["ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    execution = q._jsq.streamingQuery().lastExecution()
+    assert execution is not None, "no micro-batch ran"
+    assert count_plan_expressions(execution.optimizedPlan(), "JsonToStructs") == 1
+    assert q.lastProgress["numInputRows"] == len(EVENTS)
 
 
 def test_streaming_windowed_agg_matches_batch_groupby(spark, tmpdirs):

@@ -4,6 +4,7 @@ the reference's exact semantics, using the DAG's canned test messages
 (web-application.py:475-481) as known-answer inputs, plus the semantic
 traps from SURVEY.md §4 (truthiness, 'unknown' sentinel, parse-fail->0)."""
 
+import datetime
 import json
 
 import pytest
@@ -15,6 +16,7 @@ from streaming_data_pipeline_spark.operators.transforms import (
     quality_filter,
     wire_pipeline,
 )
+from tests.conftest import count_plan_expressions
 
 AS_OF = "2024-01-31 00:00:00"
 
@@ -132,3 +134,81 @@ def test_sample_events_scoring(spark):
     out = run(spark, events)
     assert len(out) == 5
     assert {r.data_quality_score for r in out} == {100}
+
+
+def _json_parses(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return count_plan_expressions(plan, "JsonToStructs")
+
+
+def test_transform_parses_each_message_once(spark, tmp_path):
+    """The validate and quality filters must not be pushed below the
+    parse: over a Project, Catalyst inlines from_json into every
+    predicate and prunes each field access into its own single-field
+    parse (14 per row). The Generate keeps it at one."""
+    from streaming_data_pipeline_spark.streaming.pipeline import transform
+
+    (tmp_path / "m.jsonl").write_text(json.dumps(GOOD) + "\n")
+    df = transform(spark.read.text(str(tmp_path)), as_of=AS_OF)
+    assert _json_parses(df) == 1
+    assert df.count() == 1
+
+
+def test_observed_wire_pipeline_parses_each_message_once(spark):
+    df = wire_pipeline(wire_df(spark, [GOOD]), as_of=AS_OF, observe_quality="quality")
+    assert _json_parses(df) == 1
+    assert df.count() == 1
+
+
+def test_edge_case_lines_enrich_to_pinned_rows(spark):
+    """Known answers for payloads at the edges of the parse: non-object
+    JSON, empty and cut-off lines drop; a numeric id is kept as its
+    text; a string-typed value fails its DOUBLE field (-> default 0.0,
+    score 75); unicode length counts code points; an offset timestamp
+    converts to UTC while event_hour reads the wire clock."""
+    base = {
+        "timestamp": "2024-01-15T10:00:00Z",
+        "message": "m",
+        "user_id": "u1",
+        "event_type": "click",
+        "value": 2.5,
+    }
+    lines = [
+        "null",
+        "[]",
+        "{}",
+        "",
+        '{"id":"cut-1","timestamp":"2024-01-15T10:00:00Z","message":"tr',
+        json.dumps(dict(base, id=12345)),
+        json.dumps(dict(base, id="sv-1", value="3.75")),
+        json.dumps(dict(base, id="uni-1", message="h\u00e9llo \u4e16\u754c \U0001F680"), ensure_ascii=False),
+        json.dumps(dict(base, id="tz-1", timestamp="2024-01-15T10:00:00+05:30")),
+    ]
+    df = spark.createDataFrame([Row(value=line) for line in lines])
+    got = {r.id: r.asDict() for r in wire_pipeline(df, as_of=AS_OF).collect()}
+
+    ten = datetime.datetime(2024, 1, 15, 10, 0)
+    common = {
+        "timestamp": ten,
+        "message": "m",
+        "user_id": "u1",
+        "event_type": "click",
+        "value": 2.5,
+        "processed_at": datetime.datetime(2024, 1, 31, 0, 0),
+        **{f: None for f in ("source", "ip_address", "user_agent", "page",
+                             "referrer", "product_id", "currency",
+                             "device_id", "location")},
+        "message_length": 1,
+        "event_hour": 10,
+        "data_quality_score": 100,
+    }
+    want = {
+        "12345": dict(common, id="12345"),
+        "sv-1": dict(common, id="sv-1", value=0.0, data_quality_score=75),
+        "uni-1": dict(
+            common, id="uni-1", message="h\u00e9llo \u4e16\u754c \U0001F680",
+            message_length=10,
+        ),
+        "tz-1": dict(common, id="tz-1", timestamp=datetime.datetime(2024, 1, 15, 4, 30)),
+    }
+    assert got == want
